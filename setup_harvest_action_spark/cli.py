@@ -487,7 +487,7 @@ def _run_catalog(args) -> int:
 
 
 def _run_harvest(args) -> int:
-    from setup_harvest_action_spark.harvest.load import harvest_run
+    from setup_harvest_action_spark.harvest.load import HarvestState, harvest_run
     from setup_harvest_action_spark.io.sqlite_export import export_sqlite
     from setup_harvest_action_spark.schemas import SPARQL_BINDINGS
     from setup_harvest_action_spark.session import get_spark
@@ -549,7 +549,9 @@ def _run_harvest(args) -> int:
             bstate.term_fields().drop("bucket"),
         )
     else:
-        state, stats = harvest_run(spark, [bindings], state_dir)
+        state, stats = harvest_run(
+            spark, [bindings], state_dir, state=HarvestState.latest(spark, state_dir)
+        )
         terms, term_fields = state.terms, state.term_fields
     counts = export_sqlite(terms, term_fields, args.db)
 

@@ -37,9 +37,13 @@ Spark form is a *partition-pruned merge*:
   predicates; this is the plain-filesystem analogue with the identical
   I/O profile.
 
-Surrogate ids use the hash strategy (``xxhash64``) throughout: fully
-parallel, stable across reruns, no global max-id scan — density is a
-SQLite artifact the bucketed path deliberately drops (SURVEY.md §1.3).
+The merge itself is the one in ``harvest/load.py``
+(``_terms_merge_branches``, ``_fields_fresh_rows``, ``_observed_union``);
+this layout passes in its id assigner and commits through its own
+manifest.  Surrogate ids are ``xxhash64`` of the key (``_hash_assign``):
+fully parallel, stable across reruns, no global max-id scan — density
+is a SQLite artifact the bucketed path deliberately drops (SURVEY.md
+§1.3).
 
 A rerun of the same page inserts nothing, advances ``updated_at`` on
 its touched term buckets only, and SKIPS the ``term_fields`` commit
@@ -58,7 +62,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from setup_harvest_action_spark.harvest.load import LoadStats
+from setup_harvest_action_spark.harvest.load import (
+    LoadStats,
+    _fields_fresh_rows,
+    _observed_union,
+    _terms_merge_branches,
+)
 from setup_harvest_action_spark.harvest.normalize import clean_bindings, unpivot_bindings
 from setup_harvest_action_spark.schemas import TERM_FIELDS, TERMS
 
@@ -73,6 +82,12 @@ TERM_FIELDS_BUCKETED = _with_bucket(TERM_FIELDS)
 
 def _bucket_of(uri_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(uri_col), F.lit(n_buckets)).cast("int")
+
+
+def _hash_assign(new_rows: DataFrame, existing: DataFrame, key: list[str]) -> DataFrame:
+    """The bucketed layout's surrogate ids: ``xxhash64`` of the table key
+    (see the module docstring) — ``existing`` is not consulted."""
+    return new_rows.withColumn("id", F.xxhash64(*key))
 
 
 MANIFEST = "_manifest.json"
@@ -291,18 +306,16 @@ class BucketedHarvestState:
     ) -> LoadStats:
         """One page's merge, touching only the page's buckets.
 
-        Same algebra as ``harvest_batch`` (upsert + anti-join append,
-        reference semantics harvest.py:326-372) restricted to the
-        pruned bucket set, with hash surrogate ids.
+        The merge is load.py's (``_terms_merge_branches``,
+        ``_fields_fresh_rows``, ``_observed_union``; reference semantics
+        harvest.py:326-372) restricted to the pruned bucket set, with
+        hash surrogate ids.  Each table commits through ``_commit``.
         """
-        n = self.n_buckets
-        ts = F.lit(batch_ts).cast("timestamp")
-
         concepts = (
             clean_bindings(bindings)
             .select(F.col("concept").alias("uri"))
             .distinct()
-            .withColumn("bucket", _bucket_of("uri", n))
+            .withColumn("bucket", _bucket_of("uri", self.n_buckets))
             .cache()
         )
         # bounded driver collect: distinct bucket ids only — at most
@@ -313,67 +326,19 @@ class BucketedHarvestState:
 
         # ---- terms: keyed merge inside touched buckets ----
         existing = self.terms(touched).cache()
-        matched = existing.join(concepts.select("uri"), "uri", "left_semi")
-        untouched_rows = existing.join(concepts.select("uri"), "uri", "left_anti")
-        updated = matched.withColumn("updated_at", ts)
-        inserted = concepts.join(existing.select("uri"), "uri", "left_anti").select(
-            F.xxhash64("uri").alias("id"),
-            "uri",
-            ts.alias("created_at"),
-            ts.alias("updated_at"),
-            "bucket",
+        untouched, updated, inserted = _terms_merge_branches(
+            existing, concepts, batch_ts, _hash_assign
         )
-        # Inserted/updated counters ride the staged write itself
-        # (transient marker + CollectMetrics, dropped before disk) —
-        # no count jobs in the merge, same pattern as
-        # load.harvest_batch_observed.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        merged_terms = (
-            untouched_rows.withColumn("__b", F.lit(0))
-            .unionByName(updated.withColumn("__b", F.lit(1)))
-            .unionByName(inserted.withColumn("__b", F.lit(2)))
-            .observe(
-                obs,
-                F.sum((F.col("__b") == 2).cast("long")).alias("ins"),
-                F.sum((F.col("__b") == 1).cast("long")).alias("upd"),
-            )
-            .drop("__b")
-        )
+        merged_terms, obs = _observed_union(kept=untouched, upd=updated, ins=inserted)
         self._commit("terms", merged_terms, touched)
-        n_ins = int(obs.get["ins"] or 0)
-        n_upd = int(obs.get["upd"] or 0)
 
         # ---- term_fields: FK-resolve + insert-if-absent ----
-        new_terms = self.terms(touched)
-        long = unpivot_bindings(bindings)
-        resolved = (
-            long.join(
-                new_terms.select(
-                    F.col("id").alias("term_id"),
-                    F.col("uri").alias("concept"),
-                    "bucket",
-                ),
-                "concept",
-            )
-            .select("term_id", "field_uri", "field_term", "original_value", "bucket")
-        )
-        existing_fields = self.term_fields(touched)
-        fresh = resolved.join(
-            existing_fields.select("term_id", "field_uri", "original_value"),
-            ["term_id", "field_uri", "original_value"],
-            "left_anti",
-        )
-        fresh_rows = fresh.select(
-            F.xxhash64("term_id", "field_uri", "original_value").alias("id"),
-            "term_id",
-            "field_uri",
-            "field_term",
-            "original_value",
-            ts.alias("created_at"),
-            ts.alias("updated_at"),
-            "bucket",
+        fresh_rows = _fields_fresh_rows(
+            self.term_fields(touched),
+            self.terms(touched),
+            unpivot_bindings(bindings),
+            batch_ts,
+            _hash_assign,
         ).cache()
         n_fields = fresh_rows.count()
         if n_fields:
@@ -388,4 +353,4 @@ class BucketedHarvestState:
         fresh_rows.unpersist()
         existing.unpersist()
         concepts.unpersist()
-        return LoadStats(n_ins, n_upd, n_fields)
+        return LoadStats(int(obs.get["ins"] or 0), int(obs.get["upd"] or 0), n_fields)

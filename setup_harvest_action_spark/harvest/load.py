@@ -1,4 +1,4 @@
-"""The harvest load path: upsert + anti-join append (O13/O14/O15).
+"""The harvest load path: one keyed merge and one commit step (O13-O16, O18).
 
 The reference's per-row SQL loop (reference: harvest.py:292-380) is an
 implementation artifact — O(rows) round-trips, 2 point lookups per row
@@ -17,39 +17,51 @@ one keyed merge on ``terms`` plus one anti-join append on
     ONE equi-join against ``terms`` (:327, :352-356);
   * intra-batch dedup (O16): ``terms_processed`` set → ``distinct()``
     before the merge (:318, :326, :349);
-  * load statistics (O18): inserted/updated counters from the merge
-    branches (:312-315, :377-380).
+  * load statistics (O18): inserted/updated counters observed on the
+    merge branches while the commit writes them (:312-315, :377-380).
 
-Surrogate ids replicate AUTOINCREMENT (harvest.py:191): stable across
-reruns (ids are FK targets, :204), dense, assigned as
+This module holds the only definition of that merge:
+``_terms_merge_branches`` builds the terms branches,
+``_fields_fresh_rows`` the fresh ``term_fields`` rows, and
+``_observed_union`` the counted union of branches.  Both state layouts
+call them — ``harvest_batch`` here and
+``BucketedHarvestState.load_batch`` (``harvest/bucketed.py``) — and
+differ only in the surrogate-id assigner they pass in and in how they
+commit.
+
+Ids here replicate AUTOINCREMENT (harvest.py:191, ``_dense_assign``):
+stable across reruns (ids are FK targets, :204), dense, assigned as
 ``max(existing id) + global_rank(sort key)`` over new rows.  The rank
 is computed WITHOUT a global single-task window: rows rank within
 prefix-aligned partitions in parallel, and a tiny per-partition count
 aggregate supplies each partition's offset (``_dense_ids``), so a
-large novel batch spreads across executors.  ``xxhash64(uri)`` remains
-the fully parallel alternative where density isn't required
-(SURVEY.md §1.3).
+large novel batch spreads across executors.  The bucketed layout uses
+``xxhash64`` of the key instead (SURVEY.md §1.3).
 
 State is kept as plain DataFrames so the pipeline is storage-agnostic;
 ``HarvestState.write``/``read`` persist them as parquet.  On a Delta
 deployment the same algebra is one ``MERGE INTO`` — the semantics here
-are deliberately identical.  ``harvest_run`` below rewrites the whole
-state per batch (fine for bounded vocabularies, the reference's
-regime); for large-state continuous ingest use the bucket-pruned form
-in ``harvest/bucketed.py``, which reads and rewrites only the buckets
-a batch touches.
+are deliberately identical.  ``harvest_run`` is the one commit step for
+this layout, used by the batch loop and by the streaming sink
+(``streaming/ingest.py``) alike.  It rewrites the whole state per batch
+(fine for bounded vocabularies, the reference's regime); for
+large-state continuous ingest use the bucket-pruned form in
+``harvest/bucketed.py``, which reads and rewrites only the buckets a
+batch touches.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import os
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 from dataclasses import field as _dc_field
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
+from pyspark.sql.types import StringType
 
 from setup_harvest_action_spark.harvest.normalize import clean_bindings, unpivot_bindings
 from setup_harvest_action_spark.schemas import TERM_FIELDS, TERMS
@@ -62,6 +74,13 @@ class LoadStats:
     terms_inserted: int
     terms_updated: int
     fields_inserted: int
+
+    def __add__(self, other: "LoadStats") -> "LoadStats":
+        return LoadStats(
+            self.terms_inserted + other.terms_inserted,
+            self.terms_updated + other.terms_updated,
+            self.fields_inserted + other.fields_inserted,
+        )
 
 
 @dataclass
@@ -100,6 +119,29 @@ class HarvestState:
             ),
             source_path=path,
         )
+
+    @classmethod
+    def latest(cls, spark: SparkSession, state_path: str) -> "HarvestState | None":
+        """The latest slot ``harvest_run`` committed under ``state_path``,
+        or None on a fresh directory.  Slot recency is tracked by the
+        commit marker mtime the state writer leaves (falls back to
+        slot=0 when both exist without markers — the conservative
+        choice, matching harvest_run's default starting slot)."""
+        candidates = []
+        for idx, slot in enumerate(("slot=0", "slot=1")):
+            d = os.path.join(state_path, slot)
+            if os.path.isdir(os.path.join(d, "terms")):
+                marker = os.path.join(d, "terms", "_SUCCESS")
+                mtime = os.path.getmtime(marker) if os.path.exists(marker) else 0.0
+                # tie-break on EQUAL mtime (e.g. neither slot has a marker):
+                # slot=0 wins, per the documented conservative fallback —
+                # without the -idx key the max() would compare paths and
+                # silently prefer slot=1.
+                candidates.append((mtime, -idx, d))
+        if not candidates:
+            return None
+        _, _, latest = max(candidates)
+        return cls.read(spark, latest)
 
     def write(self, path: str) -> None:
         # Atomic-per-table directory commit — the Spark analogue of the
@@ -163,83 +205,59 @@ def _dense_ids(df: DataFrame, part: F.Column, order: list[str], base: int) -> Da
     )
 
 
-def upsert_terms(
-    terms: DataFrame,
-    batch_concepts: DataFrame,
-    batch_ts: _dt.datetime,
-    id_strategy: str = "dense",
-) -> tuple[DataFrame, int, int]:
-    """Keyed merge on ``uri``: insert new concepts, touch updated_at on
-    existing ones.  Returns (new_terms, n_inserted, n_updated).
+# The unique key of ``term_fields`` (reference constraint, harvest.py:210).
+FIELD_KEY = ["term_id", "field_uri", "original_value"]
 
-    ``batch_ts`` is pinned per batch — SQLite's CURRENT_TIMESTAMP is
-    per-statement, Spark's current_timestamp() per-query; an explicit
-    literal keeps reruns deterministic (SURVEY.md §7 risk register).
+# Surrogate-id assignment, the one part of the merge a state layout
+# passes in: ``assign(new_rows, existing, key)`` returns ``new_rows``
+# with an ``id`` column, given the table ``existing`` they join and
+# that table's unique ``key`` columns.
+IdAssigner = Callable[[DataFrame, DataFrame, list[str]], DataFrame]
 
-    ``id_strategy``: ``"dense"`` replicates AUTOINCREMENT exactly
-    (max id + row_number over new rows — a global window, serial but
-    bounded by batch *novelty*, not table size); ``"hash"`` uses
-    ``xxhash64(uri)`` — fully parallel, stable across reruns, the
-    default choice at 100 TB when density isn't required (SURVEY §1.3).
-    """
-    untouched, updated, inserted = _terms_merge_branches(
-        terms, batch_concepts, batch_ts, id_strategy
-    )
-    n_updated = updated.count()
-    n_inserted = inserted.count()
-    merged = untouched.unionByName(updated).unionByName(inserted)
-    return merged, n_inserted, n_updated
+
+def _dense_assign(new_rows: DataFrame, existing: DataFrame, key: list[str]) -> DataFrame:
+    """Dense AUTOINCREMENT ids, ``max(existing id) + rank`` in ``key``
+    order, without a global single-task window (``_dense_ids``).  The
+    rank partitions are a fixed-length prefix of a string leading key
+    (``uri``) or the leading key itself (``term_id``) — both
+    order-compatible.  Worst case (every key in one partition) degrades
+    to a serial window, never worse."""
+    lead = key[0]
+    if isinstance(new_rows.schema[lead].dataType, StringType):
+        part = F.substring(lead, 1, DENSE_ID_PREFIX_LEN)
+    else:
+        part = F.col(lead)
+    return _dense_ids(new_rows, part, key, _next_id_base(existing))
 
 
 def _terms_merge_branches(
     terms: DataFrame,
-    batch_concepts: DataFrame,
+    concepts: DataFrame,
     batch_ts: _dt.datetime,
-    id_strategy: str = "dense",
+    assign_ids: IdAssigner,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """The three branches of the terms merge — (untouched, updated,
-    inserted) — shared by the eager (`upsert_terms`) and observed
-    (`harvest_batch_observed`) forms."""
-    concepts = batch_concepts.select(F.col("concept").alias("uri")).distinct()
+    """The three branches of the keyed merge on ``uri`` — (untouched,
+    updated, inserted).  ``concepts`` holds the batch's distinct
+    ``uri`` values plus any layout column (the bucketed ``bucket``),
+    which the inserted rows carry through.
+
+    ``batch_ts`` is pinned per batch — SQLite's CURRENT_TIMESTAMP is
+    per-statement, Spark's current_timestamp() per-query; an explicit
+    literal keeps reruns deterministic (SURVEY.md §7 risk register)."""
     ts = F.lit(batch_ts).cast("timestamp")
+    uris = concepts.select("uri")
 
-    matched = terms.join(concepts, "uri", "left_semi")
-    untouched = terms.join(concepts, "uri", "left_anti")
-    updated = matched.withColumn("updated_at", ts)
-
+    untouched = terms.join(uris, "uri", "left_anti")
+    updated = terms.join(uris, "uri", "left_semi").withColumn("updated_at", ts)
     new_uris = concepts.join(terms.select("uri"), "uri", "left_anti")
-    if id_strategy == "hash":
-        with_id = new_uris.withColumn("id", F.xxhash64("uri"))
-    else:
-        # Dense AUTOINCREMENT semantics (uri order) without a global
-        # single-task window: prefix-partitioned ranks + per-prefix
-        # offsets — see _dense_ids.  Worst case (all uris share the
-        # prefix) degrades to the old serial window, never worse.
-        base = _next_id_base(terms)
-        with_id = _dense_ids(
-            new_uris, F.substring("uri", 1, DENSE_ID_PREFIX_LEN), ["uri"], base
-        )
-    inserted = with_id.select(
-        F.col("id").cast("long").alias("id"),
+    inserted = assign_ids(new_uris, terms, ["uri"]).select(
+        "id",
         "uri",
         ts.alias("created_at"),
         ts.alias("updated_at"),
+        *[c for c in concepts.columns if c != "uri"],
     )
     return untouched, updated, inserted
-
-
-def append_term_fields(
-    term_fields: DataFrame,
-    terms: DataFrame,
-    batch_long: DataFrame,
-    batch_ts: _dt.datetime,
-) -> tuple[DataFrame, int]:
-    """INSERT OR IGNORE on composite key (term_id, field_uri,
-    original_value): dedup + FK-resolve via ONE join + left_anti against
-    existing.  Returns (new_term_fields, n_inserted)."""
-    inserted = _fields_fresh_rows(term_fields, terms, batch_long, batch_ts)
-    n_inserted = inserted.count()
-    return term_fields.unionByName(inserted), n_inserted
 
 
 def _fields_fresh_rows(
@@ -247,33 +265,24 @@ def _fields_fresh_rows(
     terms: DataFrame,
     batch_long: DataFrame,
     batch_ts: _dt.datetime,
+    assign_ids: IdAssigner,
 ) -> DataFrame:
-    """The insert branch of the term_fields merge (FK-resolve +
-    left_anti + dense ids) — shared by the eager and observed forms."""
+    """The insert branch of the ``term_fields`` merge — INSERT OR IGNORE
+    on ``FIELD_KEY``: the batch's long rows resolve ``term_id`` by ONE
+    equi-join against ``terms`` (carrying any layout column of
+    ``terms`` through), rows already present drop out by left_anti,
+    and the rest get ids from ``assign_ids``."""
     ts = F.lit(batch_ts).cast("timestamp")
+    extra = [c for c in terms.columns if c not in TERMS.fieldNames()]
 
     resolved = batch_long.join(
-        terms.select(F.col("id").alias("term_id"), F.col("uri").alias("concept")),
+        terms.select(
+            F.col("id").alias("term_id"), F.col("uri").alias("concept"), *extra
+        ),
         "concept",
-    ).select("term_id", "field_uri", "field_term", "original_value")
-
-    fresh = resolved.join(
-        term_fields.select("term_id", "field_uri", "original_value"),
-        ["term_id", "field_uri", "original_value"],
-        "left_anti",
-    )
-
-    base = _next_id_base(term_fields)
-    # Dense ids without a global window: partition the rank by the
-    # leading sort column (term_id) — order-compatible by construction;
-    # the offset frame is one (term_id, count) row per distinct term in
-    # the fresh batch.  See _dense_ids.
-    return _dense_ids(
-        fresh,
-        F.col("term_id"),
-        ["term_id", "field_uri", "original_value"],
-        base,
-    ).select(
+    ).select("term_id", "field_uri", "field_term", "original_value", *extra)
+    fresh = resolved.join(term_fields.select(*FIELD_KEY), FIELD_KEY, "left_anti")
+    return assign_ids(fresh, term_fields, FIELD_KEY).select(
         "id",
         "term_id",
         "field_uri",
@@ -281,16 +290,43 @@ def _fields_fresh_rows(
         "original_value",
         ts.alias("created_at"),
         ts.alias("updated_at"),
+        *extra,
     )
+
+
+def _observed_union(**branches: DataFrame) -> tuple[DataFrame, Observation]:
+    """Union the merge branches and count each one's rows DURING the
+    action that later materializes the union: a transient marker column
+    tags each branch, an ``Observation`` sums the markers under the
+    branch's keyword name (CollectMetrics — exact, accumulated
+    task-side), and the marker is dropped before anything lands on
+    disk.  The load statistics thus ride the commit write instead of
+    costing a count job per branch."""
+    obs = Observation()
+    tagged = [df.withColumn("__b", F.lit(i)) for i, df in enumerate(branches.values())]
+    counts = [
+        F.sum((F.col("__b") == i).cast("long")).alias(name)
+        for i, name in enumerate(branches)
+    ]
+    union = functools.reduce(DataFrame.unionByName, tagged)
+    return union.observe(obs, *counts).drop("__b"), obs
 
 
 def harvest_batch(
     state: HarvestState,
     bindings: DataFrame,
     batch_ts: _dt.datetime | None = None,
-) -> tuple[HarvestState, LoadStats]:
+) -> tuple[HarvestState, Callable[[], LoadStats]]:
     """Load one page/batch of SPARQL bindings — the set-oriented form of
     the reference's ``insert_results`` (harvest.py:292-380).
+
+    Returns ``(state, resolve)``.  The new state's frames are lazy; call
+    ``resolve()`` AFTER an action has materialized both tables
+    (``state.write`` does).  It blocks until the metrics of that action
+    arrive and returns the batch's LoadStats, which the reference
+    prints per page (harvest.py:312-315, 377-380).  The only per-batch
+    driver actions here are the two max-id scalars of the dense-id
+    contract.
 
     Idempotence contract (harvest.py:163-168, 292-299): re-running the
     same bindings inserts 0 terms and 0 term_fields; only
@@ -299,78 +335,24 @@ def harvest_batch(
     """
     batch_ts = batch_ts or _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
 
-    # Materialize inputs once: both merge branches and the FK join reuse
+    # Materialize inputs once: the merge branches and the FK join reuse
     # them, and the id bases must be computed against a frozen snapshot.
     cleaned = clean_bindings(bindings).cache()
     long = unpivot_bindings(bindings).cache()
-
-    terms, n_ins_t, n_upd_t = upsert_terms(state.terms, cleaned, batch_ts)
-    terms = terms.cache()
-    term_fields, n_ins_f = append_term_fields(state.term_fields, terms, long, batch_ts)
-
-    # The returned frames stay lazy; the caches above are registered on
-    # the new state so a driver loop can release them after it durably
-    # commits the state (see ``harvest_run``).  Everything here is
-    # deterministic, so re-evaluation after release is safe.
-    new_state = HarvestState(
-        terms=terms, term_fields=term_fields, retained=[cleaned, long, terms]
-    )
-    return new_state, LoadStats(n_ins_t, n_upd_t, n_ins_f)
-
-
-def harvest_batch_observed(
-    state: HarvestState,
-    bindings: DataFrame,
-    batch_ts: _dt.datetime | None = None,
-) -> tuple[HarvestState, Callable[[], LoadStats]]:
-    """``harvest_batch`` with the load statistics PIGGYBACKED on the
-    commit write instead of counted up front: the eager form runs three
-    count jobs per batch (updated, inserted terms, inserted fields);
-    here each merge branch is tagged with a transient marker column,
-    an ``Observation`` sums the markers DURING the caller's write pass
-    (CollectMetrics — exact, accumulated task-side), and the marker is
-    dropped before anything lands on disk.  Over a 1000-page run that
-    removes 3000 scheduler round-trips; the only remaining per-batch
-    driver actions are the two max-id scalars the dense-id contract
-    requires.
-
-    Returns ``(state, resolve)``; call ``resolve()`` AFTER an action
-    has materialized both tables (``state.write`` does) — it blocks
-    until the metrics arrive, then returns the same LoadStats the
-    eager form would have computed.  The reference prints these stats
-    per page (harvest.py:312-315, 377-380); semantics are unchanged."""
-    from pyspark.sql import Observation
-
-    batch_ts = batch_ts or _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-
-    cleaned = clean_bindings(bindings).cache()
-    long = unpivot_bindings(bindings).cache()
+    concepts = cleaned.select(F.col("concept").alias("uri")).distinct()
 
     untouched, updated, inserted = _terms_merge_branches(
-        state.terms, cleaned, batch_ts
+        state.terms, concepts, batch_ts, _dense_assign
     )
-    obs_terms = Observation()
-    terms = (
-        untouched.withColumn("__b", F.lit(0))
-        .unionByName(updated.withColumn("__b", F.lit(1)))
-        .unionByName(inserted.withColumn("__b", F.lit(2)))
-        .observe(
-            obs_terms,
-            F.sum((F.col("__b") == 2).cast("long")).alias("ins"),
-            F.sum((F.col("__b") == 1).cast("long")).alias("upd"),
-        )
-        .drop("__b")
-        .cache()
-    )
-    fresh = _fields_fresh_rows(state.term_fields, terms, long, batch_ts)
-    obs_fields = Observation()
-    term_fields = (
-        state.term_fields.withColumn("__new", F.lit(0))
-        .unionByName(fresh.withColumn("__new", F.lit(1)))
-        .observe(obs_fields, F.sum("__new").alias("ins"))
-        .drop("__new")
-    )
+    terms, obs_terms = _observed_union(kept=untouched, upd=updated, ins=inserted)
+    terms = terms.cache()
+    fresh = _fields_fresh_rows(state.term_fields, terms, long, batch_ts, _dense_assign)
+    term_fields, obs_fields = _observed_union(kept=state.term_fields, ins=fresh)
 
+    # The caches are registered on the new state so a driver loop can
+    # release them after it durably commits the state (see
+    # ``harvest_run``).  Everything here is deterministic, so
+    # re-evaluation after release is safe.
     new_state = HarvestState(
         terms=terms, term_fields=term_fields, retained=[cleaned, long, terms]
     )
@@ -391,38 +373,33 @@ def harvest_run(
     state: HarvestState | None = None,
     batch_ts: _dt.datetime | None = None,
 ) -> tuple[HarvestState, LoadStats]:
-    """Multi-batch driver loop — the Spark form of the reference's page
-    loop (harvest.py:405-416): every batch is durably committed before
-    the next is processed, so a mid-run crash leaves a prefix of
-    batches loaded (the reference's per-page ``conn.commit()``,
-    harvest.py:374).
+    """The commit step: the Spark form of the reference's page loop
+    (harvest.py:405-416).  Every batch is durably committed before the
+    next is processed, so a mid-run crash leaves a prefix of batches
+    loaded (the reference's per-page ``conn.commit()``, harvest.py:374).
+    The streaming sink calls it once per micro-batch.
 
     State ping-pongs between two subdirectories (``slot=0``/``slot=1``)
     because Spark cannot overwrite a parquet directory it is also
     reading from.  A resumed state (``state=`` from a previous run over
-    the same ``state_path``) starts the ping-pong on the slot it is NOT
-    backed by, for the same reason.  The per-batch parquet round-trip
-    doubles as lineage truncation: without it the state plan grows as an
-    unbounded chain of unions/joins over every batch ever loaded.
-    Cached batch inputs are released as soon as each commit lands, so
-    executor storage stays O(one batch) for the whole run.  Load
-    statistics resolve from Observations AFTER each commit
-    (``harvest_batch_observed``) — no count jobs in the loop.
+    the same ``state_path``, e.g. ``HarvestState.latest``) starts the
+    ping-pong on the slot it is NOT backed by, for the same reason.
+    The per-batch parquet round-trip doubles as lineage truncation:
+    without it the state plan grows as an unbounded chain of
+    unions/joins over every batch ever loaded.  Cached batch inputs are
+    released as soon as each commit lands, so executor storage stays
+    O(one batch) for the whole run.  Load statistics resolve from the
+    Observations AFTER each commit — no count jobs in the loop.
     """
     state = state or HarvestState.empty(spark)
     next_slot = 1 if state.source_path == os.path.join(state_path, "slot=0") else 0
     totals = LoadStats(0, 0, 0)
     for bindings in batches:
-        state, resolve = harvest_batch_observed(state, bindings, batch_ts)
+        state, resolve = harvest_batch(state, bindings, batch_ts)
         slot = os.path.join(state_path, f"slot={next_slot}")
         next_slot = 1 - next_slot
         state.write(slot)
-        stats = resolve()
+        totals += resolve()
         state.release()
         state = HarvestState.read(spark, slot)
-        totals = LoadStats(
-            totals.terms_inserted + stats.terms_inserted,
-            totals.terms_updated + stats.terms_updated,
-            totals.fields_inserted + stats.fields_inserted,
-        )
     return state, totals

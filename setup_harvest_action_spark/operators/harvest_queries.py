@@ -36,7 +36,11 @@ from setup_harvest_action_spark.harvest.constraints import (
     fk_orphans,
 )
 from setup_harvest_action_spark.harvest.field_mappings import FIELD_MAPPINGS
-from setup_harvest_action_spark.harvest.load import HarvestState, harvest_batch
+from setup_harvest_action_spark.harvest.load import (
+    HarvestState,
+    harvest_batch,
+    harvest_run,
+)
 from setup_harvest_action_spark.harvest.normalize import unpivot_bindings
 from setup_harvest_action_spark.io.loaders import load_table
 from setup_harvest_action_spark.schemas import SPARQL_BINDINGS
@@ -195,11 +199,16 @@ SELECT CAST(0 AS BIGINT) AS terms_inserted,
 def q_harvest_rerun_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Load statistics of the second run (O16/O18): the idempotence
     contract as numbers — zero inserts on both tables, every concept
-    touched as an update."""
-    state, _ = harvest_batch(HarvestState.empty(spark), _bindings_df(spark), _T1)
-    state.release()
-    state2, stats = harvest_batch(state, _bindings_df(spark), _T2)
-    state2.release()
+    touched as an update.  Both runs commit through ``harvest_run``
+    into a scratch state dir, the path whose statistics the CLI
+    prints."""
+    import tempfile
+
+    with tempfile.TemporaryDirectory(prefix="harvest_rerun_stats_") as state_dir:
+        state, _ = harvest_run(spark, [_bindings_df(spark)], state_dir, batch_ts=_T1)
+        _, stats = harvest_run(
+            spark, [_bindings_df(spark)], state_dir, state=state, batch_ts=_T2
+        )
     return spark.createDataFrame(
         [(stats.terms_inserted, stats.terms_updated, stats.fields_inserted)],
         "terms_inserted long, terms_updated long, fields_inserted long",

@@ -46,12 +46,6 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        # local[N] runs every task inside the driver JVM, whose 1g
-        # default heap is sized for a thin cluster driver, not for N
-        # concurrent task slots — iterative graph workloads at sf0.1
-        # OOM on it.  Only effective before JVM launch; a cluster
-        # submit sets executor/driver memory explicitly anyway.
-        .config("spark.driver.memory", "8g")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -77,6 +71,11 @@ def get_spark(
         # must be read as long.  Harmless when the fixture is µs.
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # local[N] runs every task inside the driver JVM, whose 1g
+        # default heap is sized for a thin cluster driver, not for N
+        # concurrent task slots — iterative graph workloads at sf0.1
+        # OOM on it.  Only effective before JVM launch; a cluster
+        # submit sets executor/driver memory explicitly anyway.
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.streaming.statefulOperator.checkCorrectness.enabled", "true")
         .config("spark.ui.enabled", "false")

@@ -1,27 +1,27 @@
 """Streaming harvest ingest: the reference's page loop
-(`/root/reference/harvest.py:405-416`) as a Structured Streaming
+(reference: harvest.py:405-416) as a Structured Streaming
 ``foreachBatch`` sink.
 
-The batch pipeline treats each SPARQL result page as one batch
-(``harvest_run``); the production ingest shape at scale is the same
-loop driven by the engine's own micro-batch machinery: a file-source
-stream of bindings parquet, ``foreachBatch`` running the identical
-idempotent merge (``harvest_batch``) per micro-batch, and the durable
-slot ping-pong committing state after each one.  That composition
-buys, for free:
+One drain (``_drain``) serves both state layouts: a file-source stream
+of bindings parquet, ``foreachBatch`` running the harvest's one merge
+per micro-batch, and an ``availableNow`` trigger that drains the
+backlog and stops — the batch job IS the streaming job run to
+completion.  New bindings files dropped into the source directory are
+picked up by the next drain.  Each layout commits through its own
+commit step:
 
-  * **exactly-once state**: the per-batch parquet commit is the same
-    durable boundary the batch loop uses (the reference's per-page
-    ``conn.commit()``, harvest.py:374), and because the merge is
-    idempotent (harvest.py:163-168, 292-299) a replayed micro-batch
-    after a crash re-inserts nothing — re-delivery collapses into the
-    upsert, so checkpoint replay is safe without transactional sinks;
-  * **bounded memory**: each micro-batch releases its caches after
-    commit, exactly like ``harvest_run``;
-  * **incremental arrival**: new bindings files dropped into the
-    source directory are picked up by the next trigger; with
-    ``availableNow`` the stream drains the backlog and stops — the
-    batch job IS the streaming job run to completion.
+  * ``harvest_stream`` calls ``harvest_run`` once per micro-batch — the
+    batch loop's commit step itself (slot ping-pong, caches released
+    after each commit, so memory stays bounded);
+  * ``harvest_stream_bucketed`` calls ``BucketedHarvestState.load_batch``
+    — the bucket-pruned manifest commit.
+
+Either way the state is **exactly-once**: the per-batch commit is the
+durable boundary (the reference's per-page ``conn.commit()``,
+harvest.py:374), and because the merge is idempotent
+(harvest.py:163-168, 292-299) a replayed micro-batch after a crash
+re-inserts nothing — re-delivery collapses into the upsert, so
+checkpoint replay is safe without transactional sinks.
 
 ``foreachBatch`` completes the streaming-surface matrix alongside the
 windowed/stateful operators in ``streaming/events.py``: it is the
@@ -32,16 +32,38 @@ express.
 from __future__ import annotations
 
 import datetime as _dt
-import os
+from collections.abc import Callable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from setup_harvest_action_spark.harvest.load import (
     HarvestState,
     LoadStats,
-    harvest_batch,
+    harvest_run,
 )
 from setup_harvest_action_spark.schemas import SPARQL_BINDINGS
+
+
+def _drain(
+    spark: SparkSession,
+    bindings_dir: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    merge: Callable[[DataFrame, int], None],
+) -> None:
+    """Run ``merge(batch_df, batch_id)`` over every not-yet-processed
+    bindings file in ``bindings_dir`` (``availableNow``), then stop.
+    The checkpoint records processed files across restarts."""
+    query = (
+        spark.readStream.schema(SPARQL_BINDINGS)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(bindings_dir)
+        .writeStream.foreachBatch(merge)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
 
 
 def harvest_stream(
@@ -53,72 +75,28 @@ def harvest_stream(
     max_files_per_trigger: int = 1,
 ) -> tuple[HarvestState, LoadStats]:
     """Drain ``bindings_dir`` (parquet files of SPARQL_BINDINGS rows)
-    into the harvest state with one idempotent merge per micro-batch,
-    then stop (``availableNow`` trigger).  Returns the final durable
-    state and the summed load statistics.
+    into the harvest state with one ``harvest_run`` commit per
+    micro-batch, then stop.  Returns the final durable state and the
+    summed load statistics.
 
     Resume: if ``state_path`` already holds a committed slot, the
-    stream continues from it — and the source checkpoint ensures
-    already-processed FILES are not re-read, while the merge's
-    idempotence makes any replayed in-flight batch a no-op."""
-    resumed = _read_latest_slot(spark, state_path)
-    holder = {
-        "state": resumed or HarvestState.empty(spark),
-        "totals": LoadStats(0, 0, 0),
-        "next_slot": 1 if (resumed and resumed.source_path or "").endswith("slot=0")
-        else 0,
-    }
+    stream continues from it (``HarvestState.latest``) — and the source
+    checkpoint ensures already-processed FILES are not re-read, while
+    the merge's idempotence makes any replayed in-flight batch a
+    no-op."""
+    state = HarvestState.latest(spark, state_path)
+    totals = LoadStats(0, 0, 0)
 
-    def _upsert(batch_df, batch_id: int) -> None:
-        state, stats = harvest_batch(holder["state"], batch_df, batch_ts)
-        slot = os.path.join(state_path, f"slot={holder['next_slot']}")
-        holder["next_slot"] = 1 - holder["next_slot"]
-        state.write(slot)
-        state.release()
-        holder["state"] = HarvestState.read(batch_df.sparkSession, slot)
-        t = holder["totals"]
-        holder["totals"] = LoadStats(
-            t.terms_inserted + stats.terms_inserted,
-            t.terms_updated + stats.terms_updated,
-            t.fields_inserted + stats.fields_inserted,
+    def _upsert(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal state, totals
+        state, stats = harvest_run(
+            batch_df.sparkSession, [batch_df], state_path,
+            state=state, batch_ts=batch_ts,
         )
+        totals += stats
 
-    stream = (
-        spark.readStream.schema(SPARQL_BINDINGS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(bindings_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return holder["state"], holder["totals"]
-
-
-def _read_latest_slot(spark: SparkSession, state_path: str) -> HarvestState | None:
-    """Latest committed slot under ``state_path``, or None on a fresh
-    directory.  Slot recency is tracked by the commit marker mtime the
-    state writer leaves (falls back to slot=0 when both exist without
-    markers — the conservative choice, matching harvest_run's default
-    starting slot)."""
-    candidates = []
-    for idx, slot in enumerate(("slot=0", "slot=1")):
-        d = os.path.join(state_path, slot)
-        if os.path.isdir(os.path.join(d, "terms")):
-            marker = os.path.join(d, "terms", "_SUCCESS")
-            mtime = os.path.getmtime(marker) if os.path.exists(marker) else 0.0
-            # tie-break on EQUAL mtime (e.g. neither slot has a marker):
-            # slot=0 wins, per the documented conservative fallback —
-            # without the -idx key the max() would compare paths and
-            # silently prefer slot=1.
-            candidates.append((mtime, -idx, d))
-    if not candidates:
-        return None
-    _, _, latest = max(candidates)
-    return HarvestState.read(spark, latest)
+    _drain(spark, bindings_dir, checkpoint_dir, max_files_per_trigger, _upsert)
+    return state or HarvestState.empty(spark), totals
 
 
 def harvest_stream_bucketed(
@@ -133,18 +111,11 @@ def harvest_stream_bucketed(
     """``harvest_stream`` over the bucket-pruned state
     (harvest/bucketed.py) — the continuous-ingest form that scales:
     each micro-batch merges into ONLY the hash buckets its uris touch
-    (partition-pruned read, per-bucket staged swap), so per-trigger
-    I/O is bounded by touched-bucket bytes, not table bytes.  The slot
-    ping-pong variant above rewrites the whole state per batch — fine
-    for the reference's bounded vocabularies, quadratic for a long
-    stream over a large corpus.
-
-    Exactly-once composition is unchanged: the source checkpoint skips
-    already-processed files across restarts, and a replayed in-flight
-    micro-batch re-inserts nothing because the merge is idempotent
-    (reference: harvest.py:163-168, 292-299) — the per-bucket
-    directory swap is the durable commit boundary (the reference's
-    per-page ``conn.commit()``, harvest.py:374).
+    (manifest-resolved pruned read, one manifest flip per table), so
+    per-trigger I/O is bounded by touched-bucket bytes, not table
+    bytes.  The slot ping-pong of ``harvest_stream`` rewrites the whole
+    state per batch — fine for the reference's bounded vocabularies,
+    quadratic for a long stream over a large corpus.
 
     Returns ``(BucketedHarvestState, LoadStats totals)``; totals count
     only THIS drain's work (resume totals restart at zero, matching
@@ -153,27 +124,11 @@ def harvest_stream_bucketed(
 
     state = BucketedHarvestState(spark, state_root, n_buckets)
     ts = batch_ts or _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-    holder = {"totals": LoadStats(0, 0, 0)}
+    totals = LoadStats(0, 0, 0)
 
-    def _merge(batch_df, batch_id: int) -> None:
-        stats = state.load_batch(batch_df, ts)
-        t = holder["totals"]
-        holder["totals"] = LoadStats(
-            t.terms_inserted + stats.terms_inserted,
-            t.terms_updated + stats.terms_updated,
-            t.fields_inserted + stats.fields_inserted,
-        )
+    def _merge(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal totals
+        totals += state.load_batch(batch_df, ts)
 
-    stream = (
-        spark.readStream.schema(SPARQL_BINDINGS)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(bindings_dir)
-    )
-    query = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return state, holder["totals"]
+    _drain(spark, bindings_dir, checkpoint_dir, max_files_per_trigger, _merge)
+    return state, totals

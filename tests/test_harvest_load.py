@@ -22,7 +22,6 @@ from setup_harvest_action_spark.harvest.load import (
     HarvestState,
     harvest_batch,
     harvest_run,
-    upsert_terms,
 )
 from setup_harvest_action_spark.schemas import SPARQL_BINDINGS, TRANSLATION_LANGUAGES
 
@@ -44,8 +43,17 @@ def bindings(spark):
     return spark.createDataFrame(ROWS, SPARQL_BINDINGS)
 
 
+def _load(state, bindings, ts):
+    """``harvest_batch`` plus the actions its statistics resolve from:
+    both tables are materialized, then ``resolve()`` reads the counts."""
+    state, resolve = harvest_batch(state, bindings, ts)
+    state.terms.collect()
+    state.term_fields.collect()
+    return state, resolve()
+
+
 def test_first_run_inserts_everything(spark, bindings):
-    state, stats = harvest_batch(HarvestState.empty(spark), bindings, T1)
+    state, stats = _load(HarvestState.empty(spark), bindings, T1)
     assert stats.terms_inserted == 2
     assert stats.terms_updated == 0
     # a: prefLabel + 2 altLabels + definition; b: prefLabel  -> 5 fields
@@ -58,11 +66,11 @@ def test_first_run_inserts_everything(spark, bindings):
 
 
 def test_double_run_is_idempotent(spark, bindings):
-    state1, _ = harvest_batch(HarvestState.empty(spark), bindings, T1)
+    state1, _ = _load(HarvestState.empty(spark), bindings, T1)
     before_fields = sorted(
         tuple(r) for r in state1.term_fields.collect()
     )
-    state2, stats2 = harvest_batch(state1, bindings, T2)
+    state2, stats2 = _load(state1, bindings, T2)
 
     # 0 inserts anywhere; every concept touched as an update
     assert stats2.terms_inserted == 0
@@ -80,7 +88,7 @@ def test_double_run_is_idempotent(spark, bindings):
 
 
 def test_incremental_batch_appends_only_new(spark, bindings):
-    state, _ = harvest_batch(HarvestState.empty(spark), bindings, T1)
+    state, _ = _load(HarvestState.empty(spark), bindings, T1)
     extra = spark.createDataFrame(
         [
             ("http://v.example/a", "A", "A-alt", "def a"),  # fully known
@@ -88,7 +96,7 @@ def test_incremental_batch_appends_only_new(spark, bindings):
         ],
         SPARQL_BINDINGS,
     )
-    state2, stats2 = harvest_batch(state, extra, T2)
+    state2, stats2 = _load(state, extra, T2)
     assert stats2.terms_inserted == 1
     assert stats2.terms_updated == 1  # only 'a' was in this batch
     assert stats2.fields_inserted == 1  # C's prefLabel
@@ -137,17 +145,25 @@ def test_harvest_run_resume_does_not_clobber_backing_slot(spark, bindings, tmp_p
     assert state2.terms.count() == 2
 
 
-def test_hash_id_strategy_is_stable_and_parallel(spark, bindings):
-    state0 = HarvestState.empty(spark)
-    from setup_harvest_action_spark.harvest.normalize import clean_bindings
+def test_hash_id_strategy_is_stable_and_parallel(spark, bindings, tmp_path):
+    """The bucketed layout's xxhash64 ids: two loads of the same
+    bindings into fresh roots agree row for row, and ids are unique."""
+    from setup_harvest_action_spark.harvest.bucketed import BucketedHarvestState
 
-    t1, _, _ = upsert_terms(state0.terms, clean_bindings(bindings), T1, "hash")
-    t2, _, _ = upsert_terms(state0.terms, clean_bindings(bindings), T1, "hash")
-    assert sorted(tuple(r) for r in t1.collect()) == sorted(
-        tuple(r) for r in t2.collect()
-    )
-    ids = [r["id"] for r in t1.collect()]
-    assert len(set(ids)) == len(ids)
+    loads = []
+    for name in ("one", "two"):
+        state = BucketedHarvestState(spark, str(tmp_path / name), n_buckets=8)
+        state.load_batch(bindings, T1)
+        loads.append([
+            sorted(tuple(r) for r in state.terms().collect()),
+            sorted(tuple(r) for r in state.term_fields().collect()),
+        ])
+    assert loads[0] == loads[1]
+    terms, fields = loads[0]
+    assert len(terms) == 2 and len(fields) == 5
+    for rows in (terms, fields):
+        ids = [r[0] for r in rows]
+        assert len(set(ids)) == len(ids)
 
 
 def test_constraint_checks_catch_violations(spark):
@@ -216,24 +232,26 @@ def test_dense_ids_parallel_form_matches_global_rank(spark):
 
 
 def test_dense_ids_multi_partition_batch_through_upsert(spark):
-    """End-to-end through upsert_terms: a 150-uri novel batch spanning
+    """End-to-end through harvest_batch: a 150-uri novel batch spanning
     many prefixes gets ids base+1..base+150 in uri order, on top of
     existing state."""
     uris = [f"http://site{i % 13}.example/v/c{i:03d}" for i in range(150)]
-    existing, _, _ = upsert_terms(
-        HarvestState.empty(spark).terms,
+    existing, _ = _load(
+        HarvestState.empty(spark),
         spark.createDataFrame(
-            [("http://a.example/seed",)], "concept string"
+            [("http://a.example/seed", "Seed", None, None)], SPARQL_BINDINGS
         ),
         T1,
     )
-    merged, n_ins, n_upd = upsert_terms(
+    merged, stats = _load(
         existing,
-        spark.createDataFrame([(u,) for u in uris], "concept string"),
+        spark.createDataFrame([(u, "L", None, None) for u in uris], SPARQL_BINDINGS),
         T2,
     )
-    assert (n_ins, n_upd) == (150, 0)
-    got = {r["uri"]: r["id"] for r in merged.collect()}
+    assert (stats.terms_inserted, stats.terms_updated) == (150, 0)
+    got = {r["uri"]: r["id"] for r in merged.terms.collect()}
     assert got["http://a.example/seed"] == 1
     for rank, u in enumerate(sorted(uris), start=2):
         assert got[u] == rank
+    existing.release()
+    merged.release()

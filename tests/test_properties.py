@@ -152,7 +152,7 @@ def test_harvest_invariants_hold_for_random_batches(spark, rows):
 
     bindings = spark.createDataFrame(rows, SPARQL_BINDINGS)
     ts = dt.datetime(2026, 3, 1)
-    state, stats = harvest_batch(HarvestState.empty(spark), bindings, ts)
+    state, _ = harvest_batch(HarvestState.empty(spark), bindings, ts)
     terms = state.terms.collect()
     fields = state.term_fields.collect()
 
@@ -168,11 +168,12 @@ def test_harvest_invariants_hold_for_random_batches(spark, rows):
     assert all(f.term_id in term_ids for f in fields)
     assert all(f.original_value is not None for f in fields)
     # rerun idempotence (harvest.py:292-299)
-    state2, stats2 = harvest_batch(state, bindings, dt.datetime(2026, 3, 2))
-    assert stats2.terms_inserted == 0
-    assert stats2.fields_inserted == 0
+    state2, resolve2 = harvest_batch(state, bindings, dt.datetime(2026, 3, 2))
     assert state2.terms.count() == len(terms)
     assert state2.term_fields.count() == len(fields)
+    stats2 = resolve2()  # observed by the two counts above
+    assert stats2.terms_inserted == 0
+    assert stats2.fields_inserted == 0
     # the release contract: caches drop to zero once both states are
     # done (harvest_run does this per committed batch)
     state.release()

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import sqlite3
 import subprocess
 import sys
@@ -17,6 +18,8 @@ from setup_harvest_action_spark.sources.sparql import (
     get_member_count,
     sparql_source,
 )
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_backoff_retries_502_with_exponential_delays():
@@ -150,14 +153,26 @@ def test_cli_error_taxonomy_no_spark():
 @pytest.mark.slow
 def test_cli_end_to_end_fake_endpoint(tmp_path):
     db = str(tmp_path / "translations.db")
+    argv = [sys.executable, "-m", "setup_harvest_action_spark", "harvest",
+            "--fake-endpoint", "120", "--db", db,
+            "--state-dir", str(tmp_path / "state"), "--batch-size", "50"]
     proc = subprocess.run(
-        [sys.executable, "-m", "setup_harvest_action_spark", "harvest",
-         "--fake-endpoint", "120", "--db", db,
-         "--state-dir", str(tmp_path / "state"), "--batch-size", "50"],
-        capture_output=True, text=True, cwd="/root/repo", timeout=300,
+        argv, capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
     )
     assert proc.returncode == 0, proc.stdout + proc.stderr
     assert "New terms inserted: 120" in proc.stdout
+    conn = sqlite3.connect(db)
+    assert conn.execute("SELECT count(*) FROM terms").fetchone()[0] == 120
+    conn.close()
+
+    # a rerun over the same --state-dir and --db resumes the committed
+    # state: nothing is re-inserted, every term is touched as an update
+    proc = subprocess.run(
+        argv, capture_output=True, text=True, cwd=REPO_ROOT, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stdout + proc.stderr
+    assert "New terms inserted: 0" in proc.stdout
+    assert "Existing terms updated: 120" in proc.stdout
     conn = sqlite3.connect(db)
     assert conn.execute("SELECT count(*) FROM terms").fetchone()[0] == 120
     conn.close()

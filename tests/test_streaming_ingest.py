@@ -73,6 +73,37 @@ def test_stream_drains_backlog_and_merges(spark, tmp_path):
     assert int(jsc.getPersistentRDDs().size()) == preexisting
 
 
+def test_stream_totals_equal_harvest_run_totals(spark, tmp_path):
+    """The stream commits each micro-batch through ``harvest_run``, so
+    draining the bindings files gives the totals of one ``harvest_run``
+    over the same files."""
+    import glob
+    import os
+    import shutil
+
+    from setup_harvest_action_spark.harvest.load import LoadStats, harvest_run
+
+    flat = str(tmp_path / "flat")
+    os.makedirs(flat)
+    for i, rows in enumerate((BATCH_A, BATCH_B)):
+        src = str(tmp_path / f"src{i}")
+        _write_batch(spark, rows, src)
+        shutil.copy(glob.glob(src + "/*.parquet")[0], f"{flat}/batch_{i}.parquet")
+
+    _, streamed = harvest_stream(
+        spark, flat, str(tmp_path / "stream_state"), str(tmp_path / "ckpt"),
+        batch_ts=_T,
+    )
+    pages = [
+        spark.read.schema(SPARQL_BINDINGS).parquet(f)
+        for f in sorted(glob.glob(flat + "/*.parquet"))
+    ]
+    _, run = harvest_run(spark, pages, str(tmp_path / "run_state"), batch_ts=_T)
+    # c1, c2 then c3 inserted; c1 updated by the second file; fields:
+    # c1 One/Uno/first + Eins, c2 Two, c3 Three/third
+    assert streamed == run == LoadStats(3, 1, 7)
+
+
 def test_stream_resume_skips_processed_files(spark, tmp_path):
     import glob
     import os
@@ -110,7 +141,7 @@ def test_read_latest_slot_prefers_slot0_on_tie(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from setup_harvest_action_spark.streaming.ingest import _read_latest_slot
+    from setup_harvest_action_spark.harvest.load import HarvestState
 
     for slot, uri in (("slot=0", "http://vocab.example/a"),
                       ("slot=1", "http://vocab.example/b")):
@@ -128,7 +159,7 @@ def test_read_latest_slot_prefers_slot0_on_tie(spark, tmp_path):
         fields.write.mode("overwrite").parquet(os.path.join(d, "term_fields"))
         os.remove(os.path.join(d, "terms", "_SUCCESS"))
 
-    state = _read_latest_slot(spark, str(tmp_path))
+    state = HarvestState.latest(spark, str(tmp_path))
     assert state is not None
     assert [r.uri for r in state.terms.collect()] == ["http://vocab.example/a"]
 
